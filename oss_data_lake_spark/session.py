@@ -20,7 +20,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# local[N] width when the caller passes none: this host's cores, so a
+# session built without ``cpus`` never oversubscribes a small machine
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
 
 
 def get_spark(

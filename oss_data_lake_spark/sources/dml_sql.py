@@ -160,13 +160,16 @@ statement-shaped text here BEFORE the query path:
 
 DML statements prune through the same conservative conjunct extraction as
 SELECTs (``snapshots.extract_prunable_predicates``'s machinery over the
-statement's WHERE text): extracted ranges intersect via ``plan_pruned`` so
-only files whose manifest bounds admit the predicate are rewritten; an
-inextractable WHERE (OR / NOT / CASE / function-wrapped columns) simply
-rewrites everything the condition touches — under-pruning is a cost, never
-a correctness, decision. Each statement returns a small result DataFrame
-(the DML ones: one row of version / files_rewritten / files_skipped —
-Delta's ``operationMetrics`` shape).
+statement's WHERE text). Copy-on-write and merge-on-read DML share one
+selection step (``SnapshotTable._dml_selection``): extracted conjuncts
+intersect via ``plan_pruned``, so only files whose manifest bounds admit
+the predicate are rewritten (or scanned for tombstones); an inextractable
+WHERE (OR / NOT / CASE / function-wrapped columns) scans every file —
+under-pruning is a cost, never a correctness, decision. Each statement
+returns a small result DataFrame (the DML ones: one row of version /
+files_rewritten / files_skipped, or files_scanned / files_skipped / mode
+for merge-on-read — Delta's ``operationMetrics`` shape); a whole-table
+scan reports the real file count.
 
 A DML-shaped statement naming an UNREGISTERED table raises immediately —
 falling through to Spark's parser would produce a far-from-cause error

@@ -28,11 +28,24 @@ This module adds that lever to ``SnapshotTable`` without the Iceberg jar:
   superset interval. Pruning with a superset interval is sound; it can
   only under-skip, never wrong-skip. Files with no usable stats are always
   read.
-- **Pruning is advisory; filters are still applied.** ``read_between``
-  prunes the file list, then applies the exact predicate to the surviving
-  rows — correctness never depends on the stats being right, only
-  efficiency does. (Pinned by tests/test_skipping.py: pruned result ==
-  unpruned result, files_read strictly < files_total.)
+- **One planning walk, three levers.** Every file-skipping plan
+  (``SnapshotTable.plan_range_scan`` / ``plan_eq_scan`` /
+  ``plan_null_scan``, and ``plan_pruned`` combining them for a
+  conjunction or an IN list) runs the same per-directory walk
+  (``SnapshotTable._walk_plan``). In each data directory the first lever
+  that applies judges every visible file: the Hive partition column's
+  path segment, then a hidden partition transform of the column (days /
+  bucket / truncate ...), then the footer stats recorded here (plus the
+  bloom for point probes). A directory no lever applies to is read whole.
+  The admit rules — ``file_may_match``, ``bloom_may_contain``,
+  ``file_may_contain_null`` / ``_nonnull`` — live in this module and are
+  all the soundness there is.
+- **Pruning is advisory; filters are still applied.** The readers
+  (``read_between``, ``read_eq``, ``read_pruned``) prune the file list,
+  then the exact predicate is applied to the surviving rows —
+  correctness never depends on the stats being right, only efficiency
+  does. (Pinned by tests/test_skipping.py: pruned result == unpruned
+  result, files_read strictly < files_total.)
 - **Clustered writes make stats effective.** Random row placement gives
   every file the full value range (nothing skips). ``commit_clustered``
   range-partitions + sorts on the cluster column before committing —
@@ -40,10 +53,10 @@ This module adds that lever to ``SnapshotTable`` without the Iceberg jar:
   One shuffle at write time buys every future range scan its file-level
   pruning; this is the 1-D form of the z-order tradeoff.
 
-Scope: range/equality predicates over numeric, string, date and timestamp
-columns. Partition columns are served by partition pruning (they are not
-in footers); file skipping is for the columns the partition layout does
-NOT cover — the two levers compose per directory.
+Scope: range/equality/IS [NOT] NULL predicates over numeric, string, date
+and timestamp columns. Partition columns are not in footers; the walk
+judges them by path segment instead, so each directory prunes by
+whichever lever its own layout offers.
 """
 
 from __future__ import annotations

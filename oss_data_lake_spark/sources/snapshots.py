@@ -3624,20 +3624,6 @@ class SnapshotTable:
             raise ValueError(f"no snapshots at {self.path}")
         return sorted(set(self._partition_tuples(v)))
 
-    def _transform_for(
-        self, manifest: dict, d: str, col_d: str
-    ) -> tuple[str | None, dict | None]:
-        """The ``(hidden_column, transform)`` partitioning dir ``d`` by
-        a DERIVED value of write-time column ``col_d``, or (None, None).
-        The lever that makes hidden partitioning prune: a predicate on
-        the SOURCE column reaches the hidden column's path segments."""
-        for pcol, tr in (
-            manifest.get("partition_transforms", {}).get(d) or {}
-        ).items():
-            if tr.get("source") == col_d:
-                return pcol, tr
-        return None, None
-
     @staticmethod
     def _transform_ptype(tr: dict) -> str:
         """The hidden column's declared type for bound encoding."""
@@ -3694,18 +3680,106 @@ class SnapshotTable:
             return None  # uncastable literal: no pruning
         return row["b"]
 
-    def _plan_partition_dir(
-        self, manifest: dict, d: str, admit
-    ) -> tuple[list[str], int]:
-        """Per-dir partition-column plan: every (visible) file judged by
-        its path-derived synthetic entry through ``admit``; returns
-        ``(kept_files, universe_size)``."""
-        stats = self.dir_stats(manifest, d) or {}
-        vis = self._visible_files(manifest, d)
-        universe = (
-            self._stats_universe(d, stats) if vis is None else sorted(vis)
+    def _plan_manifest(self, version: int | None) -> dict:
+        """The manifest a file-skipping plan reads (default: head)."""
+        v = version if version is not None else self.current_version()
+        if v is None:
+            raise ValueError(f"no snapshots at {self.path}")
+        return self._manifest(v)
+
+    def _walk_plan(self, manifest, column, ctype, admit, hidden, bloom=None):
+        """The one per-directory walk behind every file-skipping plan.
+        In each data dir the FIRST lever that applies judges every
+        visible file: (1) the Hive PARTITION column — ``admit`` judges
+        the entry derived from the file's path segment; (2) a HIDDEN
+        transform of the column — a predicate on the SOURCE column
+        reaches the hidden column's path segments: ``hidden(tr)``
+        returns ``(hidden_type, admit)`` for them, or None when the
+        predicate does not map through ``tr``; (3) FOOTER stats —
+        ``admit`` judges the recorded entry and ``bloom`` (if given) the
+        bloom. A lever passed as None does not apply; a dir no lever
+        judges is read whole (``None``). Returns ``(selection,
+        universe)``: ``universe[d]`` is each judged dir's file count, so
+        combining plans never re-lists a directory."""
+        selection: dict[str, list[str] | None] = {}
+        universe: dict[str, int] = {}
+        specs = manifest.get("partition_specs", {})
+        transforms = manifest.get("partition_transforms", {})
+        for d in manifest["data_dirs"]:
+            col_d = self._dir_stat_name(manifest, d, column)
+            stats = self.dir_stats(manifest, d) or {}
+            # the hidden column (if any) partitioning d by col_d
+            pcol, tr = next(
+                ((c, t) for c, t in (transforms.get(d) or {}).items()
+                 if t.get("source") == col_d),
+                (None, None),
+            )
+            if admit is not None and col_d in (specs.get(d) or []):
+                judge = lambda f: admit(  # noqa: E731
+                    self._partition_stats_entry(f, col_d, ctype)
+                )
+            elif tr and hidden and (lever := hidden(tr)) is not None:
+                judge = lambda f: lever[1](  # noqa: E731
+                    self._partition_stats_entry(f, pcol, lever[0])
+                )
+            elif admit is not None and stats:
+                judge = lambda f: admit(  # noqa: E731
+                    stats.get(f, {}).get(col_d)
+                ) and (
+                    bloom is None
+                    or bloom(stats.get(f, {}).get(f"bloom:{col_d}"))
+                )
+            else:
+                selection[d] = None
+                continue
+            vis = self._visible_files(manifest, d)
+            files = (
+                self._stats_universe(d, stats) if vis is None else sorted(vis)
+            )
+            selection[d] = [f for f in files if judge(f)]
+            universe[d] = len(files)
+        return selection, universe
+
+    @staticmethod
+    def _counted(plan) -> tuple[dict[str, list[str] | None], int, int]:
+        """``(selection, universe)`` → the public return shape."""
+        selection, universe = plan
+        kept = {d: f for d, f in selection.items() if f is not None}
+        n_sel = sum(len(f) for f in kept.values())
+        return selection, n_sel, sum(universe[d] for d in kept) - n_sel
+
+    def _range_plan(self, manifest: dict, column: str, lower, upper):
+        """``column BETWEEN lower AND upper`` on the walk. An unbounded
+        (or unencodable) range has no predicate to prune with — the
+        all-null skip rule must not fire — so every dir reads whole."""
+        from oss_data_lake_spark.sources import skipping
+
+        ctype = self._column_type(manifest, column)
+        lo = skipping.encode_bound(lower, ctype)
+        hi = skipping.encode_bound(upper, ctype)
+        if lo is None and hi is None:
+            return self._walk_plan(manifest, column, ctype, None, None)
+
+        def hidden(tr):
+            # push the source bounds through a MONOTONE transform onto
+            # the hidden column's segments (bucket maps no range)
+            bounds = (lower, upper)
+            mapped = [
+                None if b is None else self._transform_bound(tr, b)
+                for b in bounds
+            ]
+            if any(b is not None and m is None for b, m in zip(bounds, mapped)):
+                return None  # an unmappable bound: no pruning
+            ptype = self._transform_ptype(tr)
+            elo, ehi = (skipping.encode_bound(m, ptype) for m in mapped)
+            if elo is None and ehi is None:
+                return None
+            return ptype, lambda e: skipping.file_may_match(e, elo, ehi)
+
+        return self._walk_plan(
+            manifest, column, ctype,
+            lambda e: skipping.file_may_match(e, lo, hi), hidden,
         )
-        return [f for f in universe if admit(f)], len(universe)
 
     def plan_range_scan(
         self,
@@ -3720,96 +3794,8 @@ class SnapshotTable:
         meaning "whole directory" (no stats recorded — never skipped).
         Skips only files whose manifest bounds PROVE no row can match;
         soundness lives in ``skipping.file_may_match``."""
-        from oss_data_lake_spark.sources import skipping
-
-        v = version if version is not None else self.current_version()
-        if v is None:
-            raise ValueError(f"no snapshots at {self.path}")
-        manifest = self._manifest(v)
-        ctype = self._column_type(v, column)
-        lo = skipping.encode_bound(lower, ctype) if lower is not None else None
-        hi = skipping.encode_bound(upper, ctype) if upper is not None else None
-        selection: dict[str, list[str] | None] = {}
-        n_sel = n_skip = 0
-        for d in manifest["data_dirs"]:
-            col_d = self._dir_stat_name(manifest, d, column)
-            if (lo is not None or hi is not None) and col_d in (
-                manifest.get("partition_specs", {}).get(d) or []
-            ):
-                # PARTITION column: per-file value derived from the path
-                # segment — prunes even without footer stats
-                keep, n_univ = self._plan_partition_dir(
-                    manifest, d,
-                    lambda f, _c=col_d: skipping.file_may_match(
-                        self._partition_stats_entry(f, _c, ctype), lo, hi
-                    ),
-                )
-                selection[d] = keep
-                n_sel += len(keep)
-                n_skip += n_univ - len(keep)
-                continue
-            pcol, tr = self._transform_for(manifest, d, col_d)
-            if (lo is not None or hi is not None) and tr is not None:
-                # HIDDEN partitioning: push the source bounds through a
-                # monotone transform onto the hidden column's segments
-                plo = (
-                    self._transform_bound(tr, lower)
-                    if lower is not None
-                    else None
-                )
-                phi = (
-                    self._transform_bound(tr, upper)
-                    if upper is not None
-                    else None
-                )
-                if (lower is None or plo is not None) and (
-                    upper is None or phi is not None
-                ):
-                    ptype = self._transform_ptype(tr)
-                    elo = (
-                        skipping.encode_bound(plo, ptype)
-                        if plo is not None
-                        else None
-                    )
-                    ehi = (
-                        skipping.encode_bound(phi, ptype)
-                        if phi is not None
-                        else None
-                    )
-                    if elo is not None or ehi is not None:
-                        keep, n_univ = self._plan_partition_dir(
-                            manifest, d,
-                            lambda f, _c=pcol, _t=ptype, _l=elo, _h=ehi:
-                            skipping.file_may_match(
-                                self._partition_stats_entry(f, _c, _t),
-                                _l, _h,
-                            ),
-                        )
-                        selection[d] = keep
-                        n_sel += len(keep)
-                        n_skip += n_univ - len(keep)
-                        continue
-            stats = self.dir_stats(manifest, d)
-            if not stats or (lo is None and hi is None):
-                # no stats, or an unbounded scan (no predicate to prune
-                # with — the all-null skip rule must not fire): whole dir
-                selection[d] = None
-                continue
-            vis = self._visible_files(manifest, d)
-            universe = (
-                self._stats_universe(d, stats) if vis is None else sorted(vis)
-            )
-            keep = [
-                f
-                for f in universe
-                if skipping.file_may_match(
-                    stats.get(f, {}).get(col_d), lo, hi
-                )
-            ]
-            selection[d] = keep
-            n_sel += len(keep)
-            n_skip += len(universe) - len(keep)
-        return selection, n_sel, n_skip
+        m = self._plan_manifest(version)
+        return self._counted(self._range_plan(m, column, lower, upper))
 
     def _stats_universe(self, rel_dir: str, stats: dict) -> list[str]:
         """The FILE UNIVERSE a pruned scan of ``rel_dir`` plans against:
@@ -3862,86 +3848,43 @@ class SnapshotTable:
             pred = up if pred is None else (pred & up)
         return out.filter(pred) if pred is not None else out
 
+    def _eq_plan(self, manifest: dict, column: str, value):
+        """``column = value`` on the walk: min/max bounds AND the
+        per-file bloom (when recorded) must both admit the probe."""
+        from oss_data_lake_spark.sources import skipping
+
+        ctype = self._column_type(manifest, column)
+        enc = skipping.encode_bound(value, ctype)
+
+        def hidden(tr):
+            # a point probe maps exactly — monotone transforms via the
+            # bound map, bucket via the writer's own hash expression
+            if tr["kind"] == "bucket":
+                pval = self._bucket_value(tr, value)
+            else:
+                pval = self._transform_bound(tr, value)
+            ptype = self._transform_ptype(tr)
+            penc = skipping.encode_bound(pval, ptype)
+            if penc is None:
+                return None
+            return ptype, lambda e: skipping.file_may_match(e, penc, penc)
+
+        return self._walk_plan(
+            manifest, column, ctype,
+            (lambda e: skipping.file_may_match(e, enc, enc))
+            if enc is not None else None,
+            hidden if value is not None else None,
+            bloom=lambda e: skipping.bloom_may_contain(e, value, ctype),
+        )
+
     def plan_eq_scan(
         self, column: str, value, version: int | None = None
     ) -> tuple[dict[str, list[str] | None], int, int]:
         """File-skipping plan for ``column = value``: min/max bounds AND
         the per-file bloom (when recorded) must both admit the probe.
         Same return shape as ``plan_range_scan``."""
-        from oss_data_lake_spark.sources import skipping
-
-        v = version if version is not None else self.current_version()
-        if v is None:
-            raise ValueError(f"no snapshots at {self.path}")
-        manifest = self._manifest(v)
-        ctype = self._column_type(v, column)
-        enc = skipping.encode_bound(value, ctype)
-        selection: dict[str, list[str] | None] = {}
-        n_sel = n_skip = 0
-        for d in manifest["data_dirs"]:
-            col_d = self._dir_stat_name(manifest, d, column)
-            if enc is not None and col_d in (
-                manifest.get("partition_specs", {}).get(d) or []
-            ):
-                keep, n_univ = self._plan_partition_dir(
-                    manifest, d,
-                    lambda f, _c=col_d: skipping.file_may_match(
-                        self._partition_stats_entry(f, _c, ctype), enc, enc
-                    ),
-                )
-                selection[d] = keep
-                n_sel += len(keep)
-                n_skip += n_univ - len(keep)
-                continue
-            pcol, tr = self._transform_for(manifest, d, col_d)
-            if tr is not None and value is not None:
-                # HIDDEN partitioning: a point probe maps exactly —
-                # monotone transforms via the bound map, bucket via the
-                # writer's own hash expression
-                if tr["kind"] == "bucket":
-                    pval = self._bucket_value(tr, value)
-                else:
-                    pval = self._transform_bound(tr, value)
-                ptype = self._transform_ptype(tr)
-                penc = (
-                    skipping.encode_bound(pval, ptype)
-                    if pval is not None
-                    else None
-                )
-                if penc is not None:
-                    keep, n_univ = self._plan_partition_dir(
-                        manifest, d,
-                        lambda f, _c=pcol, _t=ptype, _e=penc:
-                        skipping.file_may_match(
-                            self._partition_stats_entry(f, _c, _t), _e, _e
-                        ),
-                    )
-                    selection[d] = keep
-                    n_sel += len(keep)
-                    n_skip += n_univ - len(keep)
-                    continue
-            stats = self.dir_stats(manifest, d)
-            if not stats or enc is None:
-                selection[d] = None
-                continue
-            vis = self._visible_files(manifest, d)
-            universe = (
-                self._stats_universe(d, stats) if vis is None else sorted(vis)
-            )
-            keep = [
-                f
-                for f in universe
-                if skipping.file_may_match(
-                    stats.get(f, {}).get(col_d), enc, enc
-                )
-                and skipping.bloom_may_contain(
-                    stats.get(f, {}).get(f"bloom:{col_d}"), value, ctype
-                )
-            ]
-            selection[d] = keep
-            n_sel += len(keep)
-            n_skip += len(universe) - len(keep)
-        return selection, n_sel, n_skip
+        m = self._plan_manifest(version)
+        return self._counted(self._eq_plan(m, column, value))
 
     def read_eq(self, column: str, value, version: int | None = None) -> DataFrame:
         """Point lookup ``column = value`` opening only files whose bounds
@@ -3994,108 +3937,73 @@ class SnapshotTable:
         recorded per-file null counts: a zero-null file cannot match
         ``IS NULL``; an all-null (or empty) file cannot match
         ``IS NOT NULL``. Missing stats → must read."""
-        from oss_data_lake_spark.sources import skipping
+        pred = {"col": column, "null": want_null}
+        return self._counted(self._plan_one(pred, self._plan_manifest(version)))
 
-        v = version if version is not None else self.current_version()
-        if v is None:
-            raise ValueError(f"no snapshots at {self.path}")
-        manifest = self._manifest(v)
-        admit = (
-            skipping.file_may_contain_null
-            if want_null
-            else skipping.file_may_contain_nonnull
-        )
-        selection: dict[str, list[str] | None] = {}
-        n_sel = n_skip = 0
-        for d in manifest["data_dirs"]:
-            col_d = self._dir_stat_name(manifest, d, column)
-            pcol, tr = self._transform_for(manifest, d, col_d)
-            if col_d in (manifest.get("partition_specs", {}).get(d) or []):
-                ctype = self._column_type(v, column)
-                keep, n_univ = self._plan_partition_dir(
-                    manifest, d,
-                    lambda f, _c=col_d: admit(
-                        self._partition_stats_entry(f, _c, ctype)
-                    ),
-                )
-                selection[d] = keep
-                n_sel += len(keep)
-                n_skip += n_univ - len(keep)
-                continue
-            if tr is not None:
-                # every transform is NULL-PRESERVING (NULL source →
-                # null partition segment), so the source's IS [NOT]
-                # NULL maps 1:1 onto the hidden column's segments
-                ptype = self._transform_ptype(tr)
-                keep, n_univ = self._plan_partition_dir(
-                    manifest, d,
-                    lambda f, _c=pcol, _t=ptype: admit(
-                        self._partition_stats_entry(f, _c, _t)
-                    ),
-                )
-                selection[d] = keep
-                n_sel += len(keep)
-                n_skip += n_univ - len(keep)
-                continue
-            stats = self.dir_stats(manifest, d)
-            if not stats:
-                selection[d] = None
-                continue
-            vis = self._visible_files(manifest, d)
-            universe = (
-                self._stats_universe(d, stats) if vis is None else sorted(vis)
-            )
-            keep = [
-                f for f in universe if admit(stats.get(f, {}).get(col_d))
-            ]
-            selection[d] = keep
-            n_sel += len(keep)
-            n_skip += len(universe) - len(keep)
-        return selection, n_sel, n_skip
-
-    # Predicate forms plan_pruned accepts:
+    # Predicate forms plan_pruned accepts, each planned by one walk:
     #   (col, lo, hi)                       range (lo == hi → eq + bloom)
     #   {"col": c, "in": [v1, v2, ...]}     IN list: the UNION of the
     #                                       per-value eq plans (each
     #                                       bloom-powered)
     #   {"col": c, "null": True|False}      IS NULL / IS NOT NULL
 
-    def _plan_one(
-        self, pred, v: int
-    ) -> dict[str, list[str] | None]:
+    def _plan_one(self, pred, manifest: dict):
+        from oss_data_lake_spark.sources import skipping
+
         if isinstance(pred, dict):
-            if "in" in pred:
-                sels = [
-                    self.plan_eq_scan(pred["col"], val, version=v)[0]
-                    for val in pred["in"]
-                ]
-                return self._union_selections(sels, v)
-            return self.plan_null_scan(pred["col"], pred["null"], version=v)[0]
+            if "in" not in pred:
+                admit = (
+                    skipping.file_may_contain_null
+                    if pred["null"]
+                    else skipping.file_may_contain_nonnull
+                )
+                # every transform is NULL-PRESERVING (NULL source → null
+                # partition segment), so the source's IS [NOT] NULL maps
+                # 1:1 onto the hidden column's segments
+                return self._walk_plan(
+                    manifest, pred["col"],
+                    self._column_type(manifest, pred["col"]),
+                    admit, lambda tr: (self._transform_ptype(tr), admit),
+                )
+            plans = [
+                self._eq_plan(manifest, pred["col"], val) for val in pred["in"]
+            ]
+            # a file survives if ANY value admits it; a dir read whole
+            # by any branch (or by an empty list) stays whole
+            selection: dict[str, list[str] | None] = {}
+            for d in manifest["data_dirs"]:
+                per_dir = [sel[d] for sel, _u in plans]
+                whole = not plans or any(p is None for p in per_dir)
+                selection[d] = None if whole else sorted(set().union(*per_dir))
+            return selection, (plans[0][1] if plans else {})
         column, lo, hi = pred
         if lo is not None and lo == hi:
             # point predicate: the eq plan adds per-file BLOOM pruning on
             # top of the min/max bounds — the lever for `WHERE id = x` on
             # columns the layout doesn't cluster
-            return self.plan_eq_scan(column, lo, version=v)[0]
-        return self.plan_range_scan(column, lo, hi, version=v)[0]
+            return self._eq_plan(manifest, column, lo)
+        return self._range_plan(manifest, column, lo, hi)
 
-    def _union_selections(
-        self, sels: list[dict[str, list[str] | None]], v: int
-    ) -> dict[str, list[str] | None]:
-        """Disjunctive combine (IN lists): a file survives if ANY branch
-        admits it; a dir read whole by any branch stays whole."""
-        manifest = self._manifest(v)
-        out: dict[str, list[str] | None] = {}
-        for d in manifest["data_dirs"]:
-            per_dir = [s.get(d) for s in sels]
-            if not sels or any(p is None for p in per_dir):
-                out[d] = None
-                continue
-            seen: set[str] = set()
-            for p in per_dir:
-                seen.update(p)
-            out[d] = sorted(seen)
-        return out
+    def _pruned_plan(self, manifest: dict, preds: list):
+        """The conjunction's plan: the INTERSECTION of each predicate's
+        plan — a file survives only if every predicate admits it."""
+        selection: dict[str, list[str] | None] = {
+            d: None for d in manifest["data_dirs"]
+        }
+        universe: dict[str, int] = {}
+        for pred in preds:
+            sel, univ = self._plan_one(pred, manifest)
+            universe.update(univ)
+            for d, files in sel.items():
+                cur = selection[d]
+                if files is None:
+                    continue  # this predicate doesn't restrict the dir
+                if cur is None:
+                    selection[d] = files
+                else:
+                    fset = set(files)
+                    selection[d] = [f for f in cur if f in fset]
+        return selection, universe
 
     def plan_pruned(
         self,
@@ -4106,40 +4014,8 @@ class SnapshotTable:
         predicate's plan (conjunction semantics) — a file survives only
         if every predicate admits it. Predicate forms documented at
         ``_plan_one``. Same return shape as ``plan_range_scan``."""
-        v = version if version is not None else self.current_version()
-        if v is None:
-            raise ValueError(f"no snapshots at {self.path}")
-        merged: dict[str, list[str] | None] | None = None
-        for pred in preds:
-            sel = self._plan_one(pred, v)
-            if merged is None:
-                merged = sel
-                continue
-            for d, files in sel.items():
-                cur = merged.get(d)
-                if files is None:
-                    continue  # this predicate doesn't restrict the dir
-                if cur is None:
-                    merged[d] = files
-                else:
-                    fset = set(files)
-                    merged[d] = [f for f in cur if f in fset]
-        if merged is None:
-            manifest = self._manifest(v)
-            merged = {d: None for d in manifest["data_dirs"]}
-        n_sel = sum(len(f) for f in merged.values() if f is not None)
-        n_skip = 0
-        manifest = self._manifest(v)
-        for d, files in merged.items():
-            if files is None:
-                continue
-            stats = self.dir_stats(manifest, d) or {}
-            vis = self._visible_files(manifest, d)
-            universe = (
-                self._stats_universe(d, stats) if vis is None else sorted(vis)
-            )
-            n_skip += len(universe) - len(files)
-        return merged, n_sel, n_skip
+        m = self._plan_manifest(version)
+        return self._counted(self._pruned_plan(m, preds))
 
     def read_pruned(
         self,
@@ -4157,15 +4033,16 @@ class SnapshotTable:
         selection, _n_sel, _n_skip = self.plan_pruned(preds, version=v)
         return self._read_selection(v, selection)
 
-    def _column_type(self, version: int, column: str) -> str | None:
+    @staticmethod
+    def _column_type(manifest: dict, column: str) -> str | None:
         """The column's Spark simpleString type from the snapshot schema
         (None when unknown — bound encoding then uses its default
         heuristic; stats for unknown columns are typically absent anyway,
         so the file is read)."""
-        target = self.schema(version)
-        if target is None:
+        s = manifest.get("schema")
+        if not s:
             return None
-        for f in target.fields:
+        for f in T.StructType.fromJson(s).fields:
             if f.name == column:
                 return f.dataType.simpleString()
         return None
@@ -4337,6 +4214,39 @@ class SnapshotTable:
             out[d] = list(fl)
         return out
 
+    def _dml_selection(
+        self,
+        manifest: dict,
+        prune_preds: list | None,
+        prune_column: str | None,
+        prune_lower,
+        prune_upper,
+    ) -> tuple[dict[str, list[str] | None], int, int]:
+        """The files a row-level DML statement scans, with its
+        ``(files_selected, files_skipped)`` counters. ``prune_preds``
+        (the SQL-text path) intersect as in ``plan_pruned``; a
+        ``prune_column`` range plans as in ``plan_range_scan`` (no
+        bloom); otherwise every dir is scanned whole and the counters
+        report the REAL file count, not 0/0 — operation metrics are
+        what cost monitoring reads."""
+        if prune_preds:
+            return self._counted(self._pruned_plan(manifest, prune_preds))
+        if prune_column is not None:
+            return self._counted(
+                self._range_plan(
+                    manifest, prune_column, prune_lower, prune_upper
+                )
+            )
+        from oss_data_lake_spark.sources.skipping import _iter_parquet_files
+
+        n_sel = 0
+        for d in manifest["data_dirs"]:
+            vis = self._visible_files(manifest, d)
+            if vis is None:
+                vis = list(_iter_parquet_files(os.path.join(self.path, d)))
+            n_sel += len(vis)
+        return {d: None for d in manifest["data_dirs"]}, n_sel, 0
+
     def delete_where_mor(
         self,
         condition: "str | F.Column",
@@ -4363,15 +4273,9 @@ class SnapshotTable:
                 raise ValueError("MoR delete needs a schema-carrying snapshot")
             manifest = self._manifest(v)
             self._require_local_dirs(manifest, "merge-on-read DELETE")
-            if prune_preds:
-                selection, n_sel, n_skip = self.plan_pruned(prune_preds, version=v)
-            elif prune_column is not None:
-                selection, n_sel, n_skip = self.plan_range_scan(
-                    prune_column, prune_lower, prune_upper, version=v
-                )
-            else:
-                selection = {d: None for d in manifest["data_dirs"]}
-                n_sel, n_skip = 0, 0
+            selection, n_sel, n_skip = self._dml_selection(
+                manifest, prune_preds, prune_column, prune_lower, prune_upper
+            )
             parts = self._scan_parts(
                 manifest, target, selection=selection, with_meta=True
             )
@@ -4469,15 +4373,9 @@ class SnapshotTable:
                 raise ValueError("MoR update needs a schema-carrying snapshot")
             manifest = self._manifest(v)
             self._require_local_dirs(manifest, "merge-on-read UPDATE")
-            if prune_preds:
-                selection, n_sel, n_skip = self.plan_pruned(prune_preds, version=v)
-            elif prune_column is not None:
-                selection, n_sel, n_skip = self.plan_range_scan(
-                    prune_column, prune_lower, prune_upper, version=v
-                )
-            else:
-                selection = {d: None for d in manifest["data_dirs"]}
-                n_sel, n_skip = 0, 0
+            selection, n_sel, n_skip = self._dml_selection(
+                manifest, prune_preds, prune_column, prune_lower, prune_upper
+            )
             parts = self._scan_parts(
                 manifest, target, selection=selection, with_meta=True
             )
@@ -4767,7 +4665,9 @@ class SnapshotTable:
             fids = manifest.get("field_ids") or {}
             id2cur = {i: n for n, i in fids.items()}
             cur_name = id2cur.get(entry["ids"][0], entry["cols"][0])
-            insel = self._plan_one({"col": cur_name, "in": keys}, mv)
+            insel, _univ = self._plan_one(
+                {"col": cur_name, "in": keys}, self._manifest(mv)
+            )
         except (OSError, ValueError, KeyError):
             return sel  # pruning is best-effort; the scan stays sound
         for d, files in insel.items():
@@ -5910,37 +5810,10 @@ class SnapshotTable:
                     "row-level DML needs a schema-carrying snapshot "
                     "(legacy manifest: recommit first)"
                 )
-            if prune_preds:
-                # multi-conjunct pruning (the SQL-text path): intersect
-                # every predicate's range plan
-                selection, n_sel, n_skip = self.plan_pruned(
-                    prune_preds, version=v
-                )
-            elif prune_column is not None:
-                selection, n_sel, n_skip = self.plan_range_scan(
-                    prune_column, prune_lower, prune_upper, version=v
-                )
-            else:
-                from oss_data_lake_spark.sources.skipping import (
-                    _iter_parquet_files,
-                )
-
-                manifest = self._manifest(v)
-                selection = {d: None for d in manifest["data_dirs"]}
-                # whole-table rewrite: report the REAL file count, not
-                # 0/0 — operation metrics are what cost monitoring reads
-                n_sel, n_skip = 0, 0
-                for d in manifest["data_dirs"]:
-                    vis = self._visible_files(manifest, d)
-                    if vis is not None:
-                        n_sel += len(vis)
-                    else:
-                        n_sel += sum(
-                            1
-                            for _ in _iter_parquet_files(
-                                os.path.join(self.path, d)
-                            )
-                        )
+            selection, n_sel, n_skip = self._dml_selection(
+                self._manifest(v), prune_preds, prune_column,
+                prune_lower, prune_upper,
+            )
             candidates = self._read_selection(v, selection)
             replacement = self._align(transform(candidates), target)
             if tag != "delete":  # deletes can't create violating rows

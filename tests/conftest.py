@@ -1,6 +1,8 @@
 from __future__ import annotations
 
+import os
 import pathlib
+import warnings
 
 import pytest
 
@@ -25,10 +27,46 @@ _SLOW_TIER = frozenset(
 )
 
 
+_SLOW_DESELECTED = pytest.StashKey[int]()
+
+
 def pytest_collection_modifyitems(config, items):
+    collected = set()
     for item in items:
+        collected.add(item.nodeid)
         if item.nodeid in _SLOW_TIER:
             item.add_marker(pytest.mark.slow)
+    # an entry naming a collected file but no collected test is dead (a
+    # renamed test, or a parametrize id cut short); files the run
+    # narrowed to single tests cannot tell, so they are not judged
+    files = {nodeid.split("::")[0] for nodeid in collected}
+    files -= {
+        os.path.relpath(os.path.abspath(arg.split("::")[0]), config.rootpath)
+        for arg in config.args
+        if "::" in arg
+    }
+    for entry in sorted(_SLOW_TIER - collected):
+        if entry.split("::")[0] in files:
+            warnings.warn(
+                pytest.PytestWarning(
+                    f"slow_tier.txt entry matches no collected test: {entry}"
+                )
+            )
+
+
+def pytest_deselected(items):
+    for item in items:
+        if item.get_closest_marker("slow") is not None:
+            stash = item.config.stash
+            stash[_SLOW_DESELECTED] = stash.get(_SLOW_DESELECTED, 0) + 1
+
+
+def pytest_terminal_summary(terminalreporter, config):
+    n = config.stash.get(_SLOW_DESELECTED, 0)
+    if n:
+        terminalreporter.write_line(
+            f"slow tier: {n} slow tests deselected (run them with -m slow)"
+        )
 
 
 @pytest.fixture(scope="session")

@@ -236,3 +236,31 @@ def test_non_canonical_table_path_canonicalized(spark, tmp_path):
     )
     assert t.read().count() == 30
     assert t.read().where("k < 10").count() == 0
+
+
+def test_mor_counters_report_whole_table_scan(spark, tmp_path):
+    """A merge-on-read DELETE or UPDATE whose WHERE has no prunable
+    conjunct scans every visible file and reports that count, exactly
+    like its copy-on-write twin reports the files it rewrote."""
+    from oss_data_lake_spark.engine import Engine
+
+    eng = Engine(spark=spark)
+    df = spark.createDataFrame(
+        [Row(k=i, s=str(i)) for i in range(40)]
+    ).repartition(4, "k")
+    for name in ("m", "c"):
+        t = SnapshotTable(spark, str(tmp_path / name))
+        t.commit(df, stats_for=["k"])
+        eng._snapshot_tables[name] = t
+    assert len(_data_files(eng._snapshot_tables["m"])) == 4
+    eng.sql("ALTER TABLE m SET TBLPROPERTIES ('delete.mode'='merge-on-read')")
+
+    cow = eng.sql("DELETE FROM c WHERE s LIKE '3%'").collect()[0]
+    assert (cow["files_rewritten"], cow["files_skipped"]) == (4, 0)
+    mor = eng.sql("DELETE FROM m WHERE s LIKE '3%'").collect()[0]
+    assert mor["mode"] == "merge-on-read"
+    assert (mor["files_scanned"], mor["files_skipped"]) == (4, 0)
+    upd = eng.sql("UPDATE m SET s = 'x' WHERE s LIKE '1%'").collect()[0]
+    assert upd["mode"] == "merge-on-read"
+    assert (upd["files_scanned"], upd["files_skipped"]) == (4, 0)
+    assert eng.sql("SELECT count(*) AS n FROM m").collect()[0]["n"] == 29

@@ -13,6 +13,7 @@ Pins the three properties the feature exists for:
 from __future__ import annotations
 
 import datetime
+import os
 
 import pytest
 from pyspark.sql import Row
@@ -20,6 +21,7 @@ from pyspark.sql import functions as F
 
 from oss_data_lake_spark.sources.loaders import load_table
 from oss_data_lake_spark.sources.skipping import (
+    _iter_parquet_files,
     encode_bound,
     file_may_match,
 )
@@ -522,3 +524,336 @@ def test_stats_universe_covers_statless_files(spark, tbl):
     assert victim in kept, "stat-less file must default to must-read"
     # and the pruned read is still complete
     assert tbl.read_between("k", 0, 99).count() == 100
+
+
+# --------------------------------------------------- planner golden parity
+#
+# One table carrying every lever the planners judge a directory by, in
+# manifest order:
+#   0  Hive partition dir (cat), footer stats on k/s
+#   1  footer-stats dir (k/s/ts + bloom on k), shrunk by a copy-on-write
+#      DELETE to 3 of its 4 files
+#   2  the DELETE's replacement dir (footer stats on k/s)
+#   3  hidden days(ts) dir, no footer stats
+#   4  hidden bucket(4, k) dir, footer stats on s
+#   5  hidden truncate(10, k) dir, no footer stats
+#   6  spilled-sidecar stats dir (k/s)
+#   7  a dir written after RENAME COLUMN k TO key (stats on key)
+# Every plan below is pinned exactly: a selection renders per dir as None
+# (read whole) or the indices of the kept files in the dir's sorted
+# parquet listing.
+
+_PLAN_DAY = datetime.datetime(2024, 1, 1)
+
+
+def _golden_rows(lo, hi, key="k"):
+    return [
+        {
+            key: i,
+            "v": i * 1.5,
+            "cat": None if i % 7 == 0 else ("even" if i % 2 == 0 else "odd"),
+            "ts": _PLAN_DAY + datetime.timedelta(days=i % 6, hours=i % 24),
+            "s": None if i % 5 == 0 else f"s{i:03d}",
+        }
+        for i in range(lo, hi)
+    ]
+
+
+def _golden_df(spark, lo, hi, key="k"):
+    return spark.createDataFrame(
+        _golden_rows(lo, hi, key),
+        f"{key} long, v double, cat string, ts timestamp, s string",
+    )
+
+
+@pytest.fixture(scope="module")
+def golden_tbl(spark, tmp_path_factory):
+    t = SnapshotTable(spark, str(tmp_path_factory.mktemp("golden") / "g"))
+    t.commit(
+        _golden_df(spark, 0, 16).repartition(2, "k"),
+        partition_by=["cat"], stats_for=["k", "s"],
+    )
+    t.commit(
+        _golden_df(spark, 64, 96).repartitionByRange(4, "k"),
+        mode="append", stats_for=["k", "s", "ts"], bloom_for=["k"],
+    )
+    t.delete_where(
+        "k = 70", prune_column="k", prune_lower=70, prune_upper=70,
+        stats_for=["k", "s"],
+    )
+    t.commit(
+        _golden_df(spark, 16, 32).repartition(2, "k"),
+        mode="append", partition_by=["days(ts)"],
+    )
+    t.commit(
+        _golden_df(spark, 32, 48).repartition(2, "k"),
+        mode="append", partition_by=["bucket(4, k)"], stats_for=["s"],
+    )
+    t.commit(
+        _golden_df(spark, 48, 64).repartition(2, "k"),
+        mode="append", partition_by=["truncate(10, k)"],
+    )
+    t.set_properties({"stats.spill.file-threshold": "1"})
+    t.commit(
+        _golden_df(spark, 96, 120).repartitionByRange(3, "k"),
+        mode="append", stats_for=["k", "s"],
+    )
+    t.set_properties({"stats.spill.file-threshold": "1000000"})
+    t.rename_column("k", "key")
+    t.commit(
+        _golden_df(spark, 120, 132, key="key").repartition(1),
+        mode="append", stats_for=["key"],
+    )
+    return t
+
+
+def _render_plan(t, plan):
+    sel, n_sel, n_skip = plan
+    m = t._manifest(t.current_version())
+    out = []
+    for d in m["data_dirs"]:
+        files = sel[d]
+        if files is None:
+            out.append(None)
+            continue
+        root = os.path.join(t.path, d)
+        names = sorted(
+            os.path.relpath(p, root) for p in _iter_parquet_files(root)
+        )
+        out.append(tuple(names.index(f) for f in files))
+    return tuple(out), n_sel, n_skip
+
+
+_TS_LO = _PLAN_DAY + datetime.timedelta(days=1)
+_TS_HI = _PLAN_DAY + datetime.timedelta(days=2, hours=5)
+
+# (case id, planner, args, the WHERE a pruned read must agree on)
+_GOLDEN_CASES = [
+    ("range2", "plan_range_scan", ("key", 20, 45), "key BETWEEN 20 AND 45"),
+    ("range_lo", "plan_range_scan", ("key", 100, None), "key >= 100"),
+    ("range_hi", "plan_range_scan", ("key", None, 12), "key <= 12"),
+    ("range_point", "plan_range_scan", ("key", 70, 70), "key = 70"),
+    ("range_ts", "plan_range_scan", ("ts", _TS_LO, _TS_HI),
+     f"ts BETWEEN '{_TS_LO}' AND '{_TS_HI}'"),
+    ("range_cat", "plan_range_scan", ("cat", "even", "even"),
+     "cat = 'even'"),
+    ("range_s", "plan_range_scan", ("s", "s010", "s019"),
+     "s BETWEEN 's010' AND 's019'"),
+    ("range_unbounded", "plan_range_scan", ("key", None, None), None),
+    ("range_unencodable", "plan_range_scan", ("key", True, None), None),
+    ("range_foreign", "plan_range_scan", ("key", "abc", None), None),
+    ("eq_stats", "plan_eq_scan", ("key", 70), "key = 70"),
+    ("eq_bucket", "plan_eq_scan", ("key", 40), "key = 40"),
+    ("eq_truncate", "plan_eq_scan", ("key", 55), "key = 55"),
+    ("eq_cat", "plan_eq_scan", ("cat", "odd"), "cat = 'odd'"),
+    ("eq_ts", "plan_eq_scan", ("ts", _PLAN_DAY + datetime.timedelta(
+        days=3, hours=21)), "ts = '2024-01-04 21:00:00'"),
+    ("eq_unencodable", "plan_eq_scan", ("key", True), None),
+    ("null_s", "plan_null_scan", ("s", True), "s IS NULL"),
+    ("notnull_s", "plan_null_scan", ("s", False), "s IS NOT NULL"),
+    ("null_cat", "plan_null_scan", ("cat", True), "cat IS NULL"),
+    ("null_ts", "plan_null_scan", ("ts", True), "ts IS NULL"),
+    ("notnull_key", "plan_null_scan", ("key", False), "key IS NOT NULL"),
+    ("pruned_range", "plan_pruned", ([("key", 20, 45)],),
+     "key BETWEEN 20 AND 45"),
+    ("pruned_point", "plan_pruned", ([("key", 70, 70)],), "key = 70"),
+    ("pruned_in", "plan_pruned",
+     ([{"col": "key", "in": [5, 40, 55, 70, 125]}],),
+     "key IN (5, 40, 55, 70, 125)"),
+    ("pruned_in_empty", "plan_pruned", ([{"col": "key", "in": []}],), None),
+    ("pruned_null", "plan_pruned", ([{"col": "s", "null": True}],),
+     "s IS NULL"),
+    ("pruned_notnull", "plan_pruned", ([{"col": "cat", "null": False}],),
+     "cat IS NOT NULL"),
+    ("pruned_unencodable", "plan_pruned", ([("key", True, None)],), None),
+    ("pruned_and", "plan_pruned",
+     ([("key", 20, 100), ("ts", _TS_LO, _TS_HI)],),
+     f"key BETWEEN 20 AND 100 AND ts BETWEEN '{_TS_LO}' AND '{_TS_HI}'"),
+    ("pruned_and_null", "plan_pruned",
+     ([("key", 0, 60), {"col": "cat", "null": False}],),
+     "key BETWEEN 0 AND 60 AND cat IS NOT NULL"),
+    ("pruned_none", "plan_pruned", ([],), None),
+]
+
+_GOLDEN_PLANS = {
+    "range2": (
+        ((), (), (), None, (0, 1, 2, 3, 4, 5, 6), (0, 1), (), ()),
+        9, 17,
+    ),
+    "range_lo": (
+        ((), (), (), None, (0, 1, 2, 3, 4, 5, 6), (), (0, 1, 2), (0,)),
+        11, 15,
+    ),
+    "range_hi": (
+        ((1, 2, 3, 4, 5), (), (), None, (0, 1, 2, 3, 4, 5, 6), (), (), ()),
+        12, 14,
+    ),
+    "range_point": (
+        ((), (), (0,), None, (0, 1, 2, 3, 4, 5, 6), (), (), ()),
+        8, 18,
+    ),
+    "range_ts": (
+        (
+            (0, 1, 2, 3, 4, 5), (1, 2, 3), (0,), (1, 2, 3),
+            (0, 1, 2, 3, 4, 5, 6), None, (0, 1, 2), (0,),
+        ),
+        24, 6,
+    ),
+    "range_cat": (
+        (
+            (2, 3), (1, 2, 3), (0,), None, (0, 1, 2, 3, 4, 5, 6), None,
+            (0, 1, 2), (0,),
+        ),
+        17, 4,
+    ),
+    "range_s": (
+        ((0, 2, 5), (), (), None, (), None, (), (0,)),
+        4, 17,
+    ),
+    "range_unbounded": (
+        (None, None, None, None, None, None, None, None),
+        0, 0,
+    ),
+    "range_unencodable": (
+        (None, None, None, None, None, None, None, None),
+        0, 0,
+    ),
+    "range_foreign": (
+        (
+            (0, 1, 2, 3, 4, 5), (1, 2, 3), (0,), None, (0, 1, 2, 3, 4, 5, 6),
+            None, (0, 1, 2), (0,),
+        ),
+        21, 0,
+    ),
+    "eq_stats": (
+        ((), (), (0,), None, (1, 2), (), (), ()),
+        3, 23,
+    ),
+    "eq_bucket": (
+        ((), (), (), None, (3, 4), (0, 1), (), ()),
+        4, 22,
+    ),
+    "eq_truncate": (
+        ((), (), (), None, (3, 4), (2, 3), (), ()),
+        4, 22,
+    ),
+    "eq_cat": (
+        (
+            (4, 5), (1, 2, 3), (0,), None, (0, 1, 2, 3, 4, 5, 6), None,
+            (0, 1, 2), (0,),
+        ),
+        17, 4,
+    ),
+    "eq_ts": (
+        (
+            (0, 1, 2, 3, 4, 5), (1, 2, 3), (0,), (4, 5), (0, 1, 2, 3, 4, 5, 6),
+            None, (0, 1, 2), (0,),
+        ),
+        23, 7,
+    ),
+    "eq_unencodable": (
+        (None, None, None, None, (3, 4), (), None, None),
+        2, 10,
+    ),
+    "null_s": (
+        ((1, 3, 4), (1, 2, 3), (0,), None, (0, 2, 4), None, (0, 1, 2), (0,)),
+        14, 7,
+    ),
+    "notnull_s": (
+        (
+            (0, 1, 2, 3, 5), (1, 2, 3), (0,), None, (1, 2, 3, 4, 5, 6), None,
+            (0, 1, 2), (0,),
+        ),
+        19, 2,
+    ),
+    "null_cat": (
+        (
+            (0, 1), (1, 2, 3), (0,), None, (0, 1, 2, 3, 4, 5, 6), None,
+            (0, 1, 2), (0,),
+        ),
+        17, 4,
+    ),
+    "null_ts": (
+        (
+            (0, 1, 2, 3, 4, 5), (), (0,), (), (0, 1, 2, 3, 4, 5, 6), None,
+            (0, 1, 2), (0,),
+        ),
+        18, 12,
+    ),
+    "notnull_key": (
+        (
+            (0, 1, 2, 3, 4, 5), (1, 2, 3), (0,), None, (0, 1, 2, 3, 4, 5, 6),
+            (0, 1, 2, 3, 4), (0, 1, 2), (0,),
+        ),
+        26, 0,
+    ),
+    "pruned_range": (
+        ((), (), (), None, (0, 1, 2, 3, 4, 5, 6), (0, 1), (), ()),
+        9, 17,
+    ),
+    "pruned_point": (
+        ((), (), (0,), None, (1, 2), (), (), ()),
+        3, 23,
+    ),
+    "pruned_in": (
+        ((1, 2, 4, 5), (), (0,), None, (1, 2, 3, 4), (0, 1, 2, 3), (), (0,)),
+        14, 12,
+    ),
+    "pruned_in_empty": (
+        (None, None, None, None, None, None, None, None),
+        0, 0,
+    ),
+    "pruned_null": (
+        ((1, 3, 4), (1, 2, 3), (0,), None, (0, 2, 4), None, (0, 1, 2), (0,)),
+        14, 7,
+    ),
+    "pruned_notnull": (
+        (
+            (2, 3, 4, 5), (1, 2, 3), (0,), None, (0, 1, 2, 3, 4, 5, 6), None,
+            (0, 1, 2), (0,),
+        ),
+        19, 2,
+    ),
+    "pruned_unencodable": (
+        (None, None, None, None, None, None, None, None),
+        0, 0,
+    ),
+    "pruned_and": (
+        (
+            (), (1, 2, 3), (0,), (1, 2, 3), (0, 1, 2, 3, 4, 5, 6),
+            (0, 1, 2, 3, 4), (0,), (),
+        ),
+        20, 15,
+    ),
+    "pruned_and_null": (
+        (
+            (2, 3, 4, 5), (), (), None, (0, 1, 2, 3, 4, 5, 6), (0, 1, 2, 3, 4),
+            (), (),
+        ),
+        16, 10,
+    ),
+    "pruned_none": (
+        (None, None, None, None, None, None, None, None),
+        0, 0,
+    ),
+}
+
+
+@pytest.mark.parametrize(
+    "case_id,planner,args,where",
+    _GOLDEN_CASES,
+    ids=[c[0] for c in _GOLDEN_CASES],
+)
+def test_planner_golden_parity(golden_tbl, case_id, planner, args, where):
+    """Every planner returns exactly the pinned plan, and a read of the
+    pruned selection under the WHERE equals the filtered full read."""
+    t = golden_tbl
+    plan = getattr(t, planner)(*args)
+    assert _render_plan(t, plan) == _GOLDEN_PLANS[case_id]
+    if where is not None:
+        v = t.current_version()
+        pruned = t._read_selection(v, plan[0]).where(where).select("key")
+        full = t.read().where(where).select("key")
+        assert sorted(r[0] for r in pruned.collect()) == sorted(
+            r[0] for r in full.collect()
+        )
